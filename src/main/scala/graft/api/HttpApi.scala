@@ -127,7 +127,6 @@ class HttpApi(spark: SparkSession, engine0: PromQLEngine,
     * otherwise look like a healthy-but-fragmenting table. */
   private[api] val compactionErrors =
     new java.util.concurrent.atomic.AtomicLong(0)
-  def compactionErrorCount: Long = compactionErrors.get()
 
   /** Rollup-rung refresh passes the write path has run — one increment
     * per write (or [[flushTiers]] call) that actually refreshed, so a

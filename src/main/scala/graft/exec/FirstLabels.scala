@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{DataType, MapType}
   * so ANY representative is correct — but Spark's builtin `first` over
   * a map type has an immutable aggregation buffer and silently demotes
   * the whole sample-volume aggregate to `SortAggregate` (the same
-  * r11 trap as min(struct); caught by `tools/PlanAudit` on s13).
+  * r11 trap as min(struct); `PlanAuditSpec` gates it).
   *
   * r12: native [[TypedImperativeAggregate]] over raw [[MapData]]
   * (plan: `ObjectHashAggregate` — hash-based, sort fallback only under

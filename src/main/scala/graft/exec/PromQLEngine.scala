@@ -1783,9 +1783,9 @@ class PromQLEngine(
       // partial (ordered fold, boundary reset at each seam) BEFORE the
       // m-fold fan-out: fanning out sub-bucket rows directly costs
       // q × m exploded rows per (series, step bucket) — measured 1.4×
-      // SLOWER than raw at q = 60 (LadderBench, 15 s cadence / 1 m
-      // rung / 1 h steps) where the merged route reads the same rows
-      // and beats raw ~2×. _j of the merged row = the step bucket's
+      // SLOWER than raw at q = 60 (dense synthetic corpus, 15 s
+      // cadence / 1 m rung / 1 h steps) where the merged route reads
+      // the same rows and beats raw ~2×. _j of the merged row = the step bucket's
       // first sub-index, keeping the downstream merge-ordering key.
       if (q == 1) sub
       else sub

@@ -43,7 +43,7 @@ case class ArrayDot(left: Expression, right: Expression)
   * no element is null — the [[graft.exec.VecMomentsExpr]] row-inclusion
   * rule as a pushable filter. Exists because the built-in spellings
   * (`array_compact`, `exists`, `filter`) all desugar to interpreted
-  * lambda HOFs, which the PlanAudit gate bans from corpus-volume map
+  * lambda HOFs, which the PlanAuditSpec gate bans from corpus-volume map
   * passes; this is one early-exit loop inside whole-stage codegen. */
 case class ArrayNoNulls(child: Expression) extends UnaryExpression {
   override def dataType: DataType =

@@ -30,13 +30,12 @@ import org.apache.spark.sql.functions._
   * full distributed path of both the approximate operator and its
   * baseline, then reduce to one row the driver can hash.
   *
-  * ID contract (r17, advice): both witnesses assume NON-NULL ids
-  * (`qid`/`neighbor_id`, `ia`/`ib`). The r16 groupBy forms treat NULL
-  * keys as equal, where the former join forms never matched them — a
-  * null-id approx row would count as a hit instead of a false
-  * positive. Every in-repo caller keys on `vec_id` (non-null by the
-  * embeddings fixture/store schema); callers with nullable ids must
-  * filter or tag them before witnessing.
+  * ID contract: a row with a NULL id (`qid`/`neighbor_id`,
+  * `ia`/`ib`) never matches. The witnesses drop null-keyed rows from
+  * the EXACT side before the groupBy (which would otherwise treat NULL
+  * keys as equal), so a null-id approx row counts as a false positive
+  * (pairs) or a miss (top-k), and a null-id exact row is not part of
+  * the baseline the recall is taken against.
   */
 object AnnWitness {
 
@@ -62,9 +61,11 @@ object AnnWitness {
     val a = ann.select(col("qid"), col("neighbor_id"),
       col("cos").cast("double").as("c"),
       lit(1L).as("_a"), lit(0L).as("_e"))
-    val e = exact.select(col("qid"), col("neighbor_id"),
-      col("cos").cast("double").as("c"),
-      lit(0L).as("_a"), lit(1L).as("_e"))
+    val e = exact
+      .where(col("qid").isNotNull && col("neighbor_id").isNotNull)
+      .select(col("qid"), col("neighbor_id"),
+        col("cos").cast("double").as("c"),
+        lit(0L).as("_a"), lit(1L).as("_e"))
     a.unionByName(e)
       .groupBy(col("qid"), col("neighbor_id"))
       .agg(sum(col("_a")).as("ca"), sum(col("_e")).as("ce"),
@@ -107,8 +108,8 @@ object AnnWitness {
     // cardinality is sum(ce).
     val a = approx.select(col("ia"), col("ib"),
       lit(1L).as("_a"), lit(0L).as("_e"))
-    val e = exact.select(col("ia"), col("ib"),
-      lit(0L).as("_a"), lit(1L).as("_e"))
+    val e = exact.where(col("ia").isNotNull && col("ib").isNotNull)
+      .select(col("ia"), col("ib"), lit(0L).as("_a"), lit(1L).as("_e"))
     a.unionByName(e)
       .groupBy(col("ia"), col("ib"))
       .agg(sum(col("_a")).as("ca"), sum(col("_e")).as("ce"))
@@ -120,26 +121,5 @@ object AnnWitness {
       .select(col("exact_pairs"), col("false_pos"),
         (col("hits").cast("double") / col("exact_pairs") >= minRecall)
           .cast("long").as("recall_ok"))
-  }
-
-  /** Raw (unthresholded) stats for threshold tuning — not a contract
-    * surface. */
-  def rawTopkStats(ann: DataFrame, exact: DataFrame): String = {
-    val a = ann.select(col("qid"), col("neighbor_id"),
-      col("cos").cast("double").as("acos"))
-    val e = exact.select(col("qid"), col("neighbor_id"),
-      col("cos").cast("double").as("ecos"))
-    val hits = a.join(e, Seq("qid", "neighbor_id")).count()
-    val (na, ne) = (a.count(), e.count())
-    s"ann_rows=$na exact_rows=$ne hits=$hits recall=${hits.toDouble / ne}"
-  }
-
-  def rawPairStats(approx: DataFrame, exact: DataFrame): String = {
-    val a = approx.select(col("ia"), col("ib"))
-    val e = exact.select(col("ia"), col("ib"))
-    val fp = a.join(e, Seq("ia", "ib"), "left_anti").count()
-    val hits = a.join(e, Seq("ia", "ib")).count()
-    val (na, ne) = (a.count(), e.count())
-    s"approx=$na exact=$ne hits=$hits fp=$fp recall=${hits.toDouble / ne}"
   }
 }

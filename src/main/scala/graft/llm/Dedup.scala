@@ -803,9 +803,9 @@ object Dedup {
     * plan, so build the index from the exact frame later sessions will
     * pass — for the production shape, persist the fingerprint (set)
     * table first and build from its RE-READ (`spark.read.parquet`)
-    * frame (`graft.tools.DedupIndexBench` build mode); a
-    * computed-from-text frame also works when every session derives it
-    * from the same corpus path with the same shingle parameters. */
+    * frame; a computed-from-text frame also works when every session
+    * derives it from the same corpus path with the same shingle
+    * parameters. */
   def writeIncrementalIndex(historySets: DataFrame, dir: String,
       thresholds: Seq[Double],
       share: Double = DefaultPrefixDfShare): Unit = {

@@ -122,11 +122,6 @@ object Samples {
   val StaleNaNBits: Long = 0x7ff0000000000002L
   val StaleNaN: Double = java.lang.Double.longBitsToDouble(StaleNaNBits)
 
-  private val isStaleUdf = udf { v: Double =>
-    java.lang.Double.doubleToRawLongBits(v) == StaleNaNBits
-  }
-  def isStale(v: Column): Column = isStaleUdf(v)
-
   /** Adapter: driver test table `events` → canonical samples.
     * Series labels: metric name + event_type + user_id. */
   def fromEvents(events: DataFrame): DataFrame = {

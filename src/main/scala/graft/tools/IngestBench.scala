@@ -22,10 +22,11 @@ import graft.storage.Ingest
   * of the bare append — per batch, the exact sink sequence of
   * `HttpApi.forTable(rollups = hourly+daily, chunks = true)`:
   * dedup-once → canonical table append → per-batch Gorilla chunk cut →
-  * series-index upsert → touched-dates rollup refresh — into ONE
-  * persistent table whose batches are consecutive time windows, so the
-  * rung rewrite each batch covers everything that date has accumulated
-  * (the honest long-running-server cost, not a fresh-dir ideal).
+  * series-index upsert → incremental merge of the batch into the
+  * touched dates' rungs (`Ingest.refreshFoldPartialsIncremental`) —
+  * into ONE persistent table whose batches are consecutive time
+  * windows (the honest long-running-server cost, not a fresh-dir
+  * ideal).
   * Prints the per-tier split so the BASELINE.md write-path claim
   * covers the configuration actually served.
   */
@@ -38,19 +39,11 @@ object IngestBench {
     // parse (a value-equality filter would eat a positional arg that
     // happens to equal the flag's value).
     var refreshEvery = 1
-    // r14: the DEFAULT rung maintenance is the associative batch
-    // merge (refreshFoldPartialsIncremental) -- what forTable's
-    // non-debounced write path now runs; --full-refold restores the
-    // pre-r14 full-date refold for the A/B that shows the
-    // volume-coupled term growing as a date accumulates batches
-    var incremental = true
     val argv = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
     while (i < args.length) {
       args(i) match {
         case "--tiers" =>
-        case "--incremental" => incremental = true
-        case "--full-refold" => incremental = false
         case "--refresh-every" => refreshEvery = args(i + 1).toInt; i += 1
         case a => argv += a
       }
@@ -117,11 +110,10 @@ object IngestBench {
           case _ =>
         }
       var pendingDates = Set.empty[String]
-      // r15: the debounced INCREMENTAL flush buffers the deferred
-      // batches' canonical frames (checkpointed, so buffering holds
-      // blocks, not lineage) and merges their UNION at the due batch —
-      // the forTable debounced-flush shape; pre-r15 --refresh-every
-      // was silently ignored with --incremental (r14 advice)
+      // the debounced flush buffers the deferred batches' canonical
+      // frames (checkpointed, so buffering holds blocks, not lineage)
+      // and merges their UNION at the due batch — the forTable
+      // debounced-flush shape
       var pendingCanon = Vector.empty[org.apache.spark.sql.DataFrame]
       for (b <- 0 until batches) {
         val df = batchDf(b)
@@ -144,28 +136,17 @@ object IngestBench {
             spark.catalog.refreshByPath(path)
           }
           pendingDates ++= Ingest.datesOf(df)
-          // the union flush only exists on the incremental path; the
-          // full-refold A/B arm recomputes from the table, so holding
-          // checkpoint blocks there would just skew its memory profile
-          if (incremental) pendingCanon :+= canon
+          pendingCanon :+= canon
           val due = (b + 1) % refreshEvery == 0 || b == batches - 1
           val nDates = pendingDates.size
           val nBatches = pendingCanon.size
           val tRungs = timed {
             if (due) {
-              if (incremental) {
-                val union = pendingCanon.reduce(_.unionByName(_))
-                rollups.foreach { r =>
-                  Ingest.refreshFoldPartialsIncremental(spark, path,
-                    Ingest.rollupPath(path, r), r, union)
-                  spark.catalog.refreshByPath(Ingest.rollupPath(path, r))
-                }
-              } else {
-                rollups.foreach { r =>
-                  Ingest.refreshFoldPartials(spark, path,
-                    Ingest.rollupPath(path, r), r, Some(pendingDates.toSeq))
-                  spark.catalog.refreshByPath(Ingest.rollupPath(path, r))
-                }
+              val union = pendingCanon.reduce(_.unionByName(_))
+              rollups.foreach { r =>
+                Ingest.refreshFoldPartialsIncremental(spark, path,
+                  Ingest.rollupPath(path, r), r, union)
+                spark.catalog.refreshByPath(Ingest.rollupPath(path, r))
               }
               pendingDates = Set.empty
             }
@@ -177,8 +158,7 @@ object IngestBench {
             f" rungs($nDates%dd/$nBatches%db${if (due) "" else " deferred"})" +
             f" $tRungs%.2f]" + (if (b == 0) " (cold)" else ""))
         } finally {
-          if (!incremental) freeCheckpoint(canon)
-          else if (pendingDates.isEmpty) {
+          if (pendingDates.isEmpty) {
             // flushed (or never deferred): the buffered checkpoints'
             // blocks are no longer needed
             pendingCanon.foreach(freeCheckpoint)

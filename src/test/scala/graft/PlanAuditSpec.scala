@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Whole-surface plan-smell GATE (r12, promoting `tools/PlanAudit`
-  * from a manual sweep to CI): every driver entry's formatted plan
+/** Whole-surface plan-smell GATE (r12, promoting a manual plan sweep
+  * to CI): every driver entry's formatted plan
   * must contain ZERO `SortAggregate` and ZERO `CartesianProduct`
   * nodes, and `BroadcastNestedLoopJoin` only in the adjudicated
   * allowlist below. The r11 audit proved these demotions enter

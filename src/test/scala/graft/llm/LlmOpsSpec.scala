@@ -2078,4 +2078,31 @@ class LlmOpsSpec extends SparkTestBase {
     }
     assert(got.nonEmpty)
   }
+
+  test("AnnWitness: a null-id row on both sides never matches") {
+    // approx and exact share (1,2) and a null-keyed row; exact also
+    // holds (3,4). The null row is a false positive / miss, and the
+    // baseline is the two non-null exact rows, so recall is 1/2.
+    val approx = Seq((Option(1L), Option(2L), 0.95),
+      (Option.empty[Long], Option(5L), 0.93)).toDF("ia", "ib", "cos")
+    val exact = Seq((Option(1L), Option(2L), 0.95),
+      (Option(3L), Option(4L), 0.91),
+      (Option.empty[Long], Option(5L), 0.93)).toDF("ia", "ib", "cos")
+    val p = AnnWitness.pairsWitness(approx, exact, 0.6).head()
+    assert(p.getAs[Long]("false_pos") == 1L)
+    assert(p.getAs[Long]("exact_pairs") == 2L)
+    assert(p.getAs[Long]("recall_ok") == 0L) // 1/2 < 0.6
+    assert(AnnWitness.pairsWitness(approx, exact, 0.5).head()
+      .getAs[Long]("recall_ok") == 1L)
+
+    val ann = approx.toDF("qid", "neighbor_id", "cos")
+    val exactK = exact.toDF("qid", "neighbor_id", "cos")
+    val k = AnnWitness.topkWitness(ann, exactK, 0.6).head()
+    assert(k.getAs[Long]("n_queries") == 1L)
+    assert(k.getAs[Long]("ann_rows") == 2L)
+    assert(k.getAs[Long]("exact_rows") == 2L)
+    assert(k.getAs[Long]("recall_ok") == 0L)
+    assert(AnnWitness.topkWitness(ann, exactK, 0.5).head()
+      .getAs[Long]("recall_ok") == 1L)
+  }
 }
